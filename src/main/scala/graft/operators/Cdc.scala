@@ -10,8 +10,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * sweep (hunter.py:336-354) as Spark operators.
   *
   * Two forms:
-  *  - [[batchEvents]]: previous ⟗ current full-outer join — used for
-  *    batch reconciliation and oracle testing.
+  *  - [[batchTransitions]]: previous ⟗ current full-outer join — used
+  *    for batch reconciliation; [[batchEvents]] is its event column,
+  *    used for oracle testing.
   *  - [[streamingEvents]]: flatMapGroupsWithState keyed by mls —
   *    state is the last-seen Listing; transitions emit typed events.
   *    Off-market detection uses processing-time timeout (the
@@ -37,25 +38,38 @@ object Cdc {
       newL.price, Some(old.price), pct, None, newL.source)
   }
 
+  /** The batch CDC with the listing kept next to its event: one row
+    * per mls of prev ∪ cur, holding the current listing (null when it
+    * went off market) and the event it raised (null when unchanged).
+    * A caller that materializes this once can project the events, the
+    * next state and the sink's evented rows from the one result. */
+  def batchTransitions(prev: Dataset[Listing], cur: Dataset[Listing],
+      nowEpoch: Long): Dataset[(Listing, ListingEvent)] = {
+    val spark = prev.sparkSession
+    import spark.implicits._
+    prev.as("p").joinWith(cur.as("c"), $"p.mls" === $"c.mls", "full_outer")
+      .map { case (old, newL) =>
+        val event = (Option(old), Option(newL)) match {
+          case (None, Some(n)) =>
+            ListingEvent(n.mls, "new_listing", None, n.price, None,
+              None, None, n.source)
+          case (Some(o), Some(n)) if n.price != o.price =>
+            priceChange(n, o)
+          case (Some(o), None) =>
+            val days = ((nowEpoch - o.foundDate) / 86400).toInt
+            ListingEvent(o.mls, "off_market", None, o.price, None,
+              None, Some(days), o.source)
+          case _ => null // unchanged → no-op (T5)
+        }
+        (newL, event)
+      }
+  }
+
   def batchEvents(prev: Dataset[Listing], cur: Dataset[Listing],
       nowEpoch: Long): Dataset[ListingEvent] = {
     val spark = prev.sparkSession
     import spark.implicits._
-    prev.as("p").joinWith(cur.as("c"), $"p.mls" === $"c.mls", "full_outer")
-      .flatMap { case (old, newL) =>
-        (Option(old), Option(newL)) match {
-          case (None, Some(n)) =>
-            Some(ListingEvent(n.mls, "new_listing", None, n.price, None,
-              None, None, n.source))
-          case (Some(o), Some(n)) if n.price != o.price =>
-            Some(priceChange(n, o))
-          case (Some(o), None) =>
-            val days = ((nowEpoch - o.foundDate) / 86400).toInt
-            Some(ListingEvent(o.mls, "off_market", None, o.price, None,
-              None, Some(days), o.source))
-          case _ => None // unchanged → no-op (T5)
-        }
-      }
+    batchTransitions(prev, cur, nowEpoch).flatMap(t => Option(t._2))
   }
 
   /** Streaming CDC. Emits new_listing/price_change on updates and

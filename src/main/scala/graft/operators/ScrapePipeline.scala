@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   *
   *   URE source (S1/S2) ∪ Trulia source (S4-S6, tagged TRULIA)
   *     → dropDuplicates(mls) (A4)
-  *     → CDC against previous state (J2/J3/T2)
-  *     → graph sink (K1, events drive the upsert)
-  *     → new state (K2/S11 persistence is the caller's choice:
-  *       checkpoint in streaming, CsvSinks.writeState in batch)
+  *     → CDC transitions against previous state (J2/J3/T2),
+  *       materialized once per cycle
+  *     → events, new state and the graph sink's evented rows (K1),
+  *       all projections of that one result
   *
   * The reference runs this serially per zip with per-row sink round
   * trips (main.py:109-138); here one cycle is one distributed plan:
@@ -31,6 +31,22 @@ object ScrapePipeline {
       events: Dataset[ListingEvent],
       newState: Dataset[Listing])
 
+  /** Run one cycle. The scan, dedup and CDC join run exactly once:
+    * their per-mls transitions are locally checkpointed (eagerly)
+    * before anything reads them, and the sink, `events` and
+    * `newState` all read that checkpoint.
+    *
+    * Checkpoint lifetime: the returned frames own the transitions
+    * checkpoint. It stays readable for as long as either frame (or a
+    * plan built on it, such as the next cycle's CDC) is reachable, and
+    * Spark's ContextCleaner unpersists its blocks once they have all
+    * been dropped and collected. A caller that keeps state across
+    * cycles should checkpoint `newState` itself and drop the result,
+    * so at most one cycle's transitions stay pinned.
+    *
+    * In bypass mode the Trulia rows skip the state machine: each one
+    * is an unconditional new_listing event that reaches the sink but
+    * not `newState`, and the Trulia source is read by each consumer. */
   def runCycle(
       spark: SparkSession,
       ure: ListingSource,
@@ -61,25 +77,27 @@ object ScrapePipeline {
       .filter($"rn" === 1).drop("rn")
       .as[Listing]
 
-    val events = Cdc.batchEvents(prevState, batch, nowEpoch)
+    val transitions = Cdc.batchTransitions(prevState, batch, nowEpoch)
+      .localCheckpoint(eager = true)
+    def events(t: Dataset[(Listing, ListingEvent)]) =
+      t.filter($"_2".isNotNull).select($"_2.*").as[ListingEvent]
+    val newState = transitions.filter($"_1".isNotNull).select($"_1.*").as[Listing]
+    // K1: evented rows only, node props carry the event —
+    // main.py:24-35 → database_ops.py:29-30 (MERGE = idempotent).
+    val evented = transitions.filter($"_1".isNotNull && $"_2".isNotNull)
 
     // Trulia fidelity mode: unconditional new_listing, state untouched
-    val allEvents =
-      if (truliaBypassesState)
-        events.union(truliaRows.map(t => ListingEvent(
+    // (trulia_scraper.py:140 sends the rows to the sink regardless)
+    val (sinkPairs, allEvents) =
+      if (truliaBypassesState) {
+        val truliaPairs = truliaRows.map(t => (t, ListingEvent(
           t.mls, "new_listing", None, t.price, None, None, None, t.source)))
-      else events
+        (evented.union(truliaPairs),
+          events(transitions).union(events(truliaPairs)))
+      } else (evented, events(transitions))
 
-    writer.foreach { w =>
-      // K1: evented rows only, node props carry the event —
-      // main.py:24-35 → database_ops.py:29-30 (MERGE = idempotent).
-      // In bypass mode trulia rows skip state but still hit the sink
-      // (trulia_scraper.py:140 sends them unconditionally).
-      val sinkRows =
-        if (truliaBypassesState) batch.union(truliaRows) else batch
-      GraphSink.writeGraph(sinkRows, allEvents, nowEpoch, w)
-    }
+    writer.foreach(GraphSink.writeEvented(sinkPairs, nowEpoch, _))
 
-    CycleResult(allEvents, batch)
+    CycleResult(allEvents, newState)
   }
 }

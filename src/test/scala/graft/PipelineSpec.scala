@@ -71,6 +71,39 @@ class PipelineSpec extends SparkSpec {
     assert(r.newState.head().beds.contains(3L))
   }
 
+  test("Trulia bypass mode: unconditional new_listing, no state, still sunk") {
+    import graft.sources.TruliaFixtureSource
+    val index = Seq(("84601",
+      """<a data-testid="property-card-link" href="/p/1">x</a>"""))
+      .toDF("zip", "html")
+    val details = Seq(("https://www.trulia.com/p/1",
+      """<span class="mls">T1</span><span class="price">$350,000</span>"""))
+      .toDF("url", "html")
+    val trulia = new TruliaFixtureSource(index, details)
+    val ure = new FixtureSource(
+      Seq(("84601", urePage("A", "$100,000"))).toDF("zip", "html"))
+
+    InMemoryGraphWriter.clear()
+    val writer = new InMemoryGraphWriter
+    val r1 = ScrapePipeline.runCycle(spark, ure, trulia, Seq("84601"),
+      spark.emptyDataset[Listing], 1700000000L, Some(writer),
+      truliaBypassesState = true)
+    assert(r1.events.collect().map(e => (e.mls, e.status, e.source)).sorted.toSeq ==
+      Seq(("A", "new_listing", "URE"), ("T1", "new_listing", "TRULIA")))
+    assert(r1.newState.collect().map(_.mls).toSeq == Seq("A"))
+    assert(InMemoryGraphWriter.keysWithPrefix("Listing|").sorted ==
+      Seq("Listing|A", "Listing|T1"))
+    assert(InMemoryGraphWriter.store.get("Listing|T1")("source") == "TRULIA")
+
+    // the same pages again: A is unchanged, T1 is new again because
+    // it never entered the state
+    val r2 = ScrapePipeline.runCycle(spark, ure, trulia, Seq("84601"),
+      r1.newState, 1700003600L, Some(writer), truliaBypassesState = true)
+    assert(r2.events.collect().map(e => (e.mls, e.status)).toSeq ==
+      Seq(("T1", "new_listing")))
+    assert(r2.newState.collect().map(_.mls).toSeq == Seq("A"))
+  }
+
   test("salted aggregation matches plain aggregation") {
     val docs = Tables.documents(spark, sf("sf0.001"))
     val plain = docs.groupBy($"lang")
